@@ -44,24 +44,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from etlp_spark.connectors.snapshots import SnapshotStore
+
 __all__ = ["SnapshotDataSource"]
-
-
-def _store(root: str):
-    """Single source of truth for the on-disk layout: reuse
-    SnapshotStore's manifest plumbing rather than re-implementing the
-    filename pattern here (a layout change then updates one place)."""
-    from etlp_spark.connectors.snapshots import SnapshotStore
-
-    return SnapshotStore(root)
-
-
-def _manifest(root: str, version: int) -> dict:
-    return _store(root).manifest(version)
-
-
-def _versions(root: str) -> list[int]:
-    return _store(root).versions()
 
 
 class _FilePartition(InputPartition):
@@ -96,7 +81,7 @@ class _SnapshotBatchReader(DataSourceReader):
         self.schema = schema
         self.root = options["root"]
         v = options.get("version")
-        vs = _versions(self.root)
+        vs = SnapshotStore(self.root).versions()
         if not vs:
             raise ValueError(f"snapshot store {self.root} has no versions")
         self.version = int(v) if v is not None else vs[-1]
@@ -106,9 +91,8 @@ class _SnapshotBatchReader(DataSourceReader):
             )
 
     def partitions(self) -> Sequence[InputPartition]:
-        return [
-            _FilePartition(p) for p in _manifest(self.root, self.version)["files"]
-        ]
+        files = SnapshotStore(self.root).manifest(self.version)["files"]
+        return [_FilePartition(p) for p in files]
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
         return _read_parquet_batches(partition.path, self.schema)
@@ -128,7 +112,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         return {"version": start}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self.root)
+        vs = SnapshotStore(self.root).versions()
         return {"version": vs[-1] if vs else 0}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
@@ -143,11 +127,12 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         (``expire(keep_last >= consumer lag + 1)``) — the same
         contract every CDC log compaction has."""
         out: list[_FilePartition] = []
-        vs = sorted(_versions(self.root))
+        store = SnapshotStore(self.root)
+        vs = store.versions()
         delivered: set[str] = set()
         base = [w for w in vs if w <= start["version"]]
         if base:
-            delivered = set(_manifest(self.root, max(base))["files"])
+            delivered = set(store.manifest(max(base))["files"])
         elif start["version"] > 0:
             # Retention broke the contract: every manifest at-or-below
             # the committed offset is gone, so the delta baseline is
@@ -167,7 +152,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         for v in vs:
             if not (start["version"] < v <= end["version"]):
                 continue
-            files = set(_manifest(self.root, v)["files"])
+            files = set(store.manifest(v)["files"])
             out.extend(_FilePartition(p) for p in sorted(files - delivered))
             delivered |= files
         return out
@@ -190,14 +175,15 @@ class SnapshotDataSource(DataSource):
         writes may change schema between versions; using the latest
         manifest for a time-travel read would mis-shape the rows)."""
         root = self.options["root"]
-        vs = _versions(root)
+        store = SnapshotStore(root)
+        vs = store.versions()
         if not vs:
             raise ValueError(f"snapshot store {root} has no versions")
         v = self.options.get("version")
         version = int(v) if v is not None else vs[-1]
         if version not in vs:
             raise ValueError(f"version {version} not in store {root}; have {vs}")
-        return StructType.fromJson(json.loads(_manifest(root, version)["schema"]))
+        return StructType.fromJson(json.loads(store.manifest(version)["schema"]))
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return _SnapshotBatchReader(schema, dict(self.options))

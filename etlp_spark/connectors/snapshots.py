@@ -35,10 +35,19 @@ keeps scheme+netloc verbatim for object-store schemes — an
 URI with no local mangling (unit-pinned by
 ``test_norm_file_keeps_object_store_uris``).
 
-Commit protocol: data first, then the manifest via write-temp +
-``os.link`` (atomic on POSIX; exclusive — see concurrency below). A
-crashed write leaves an orphaned data directory but NO manifest —
-readers never see a partial version; ``expire`` sweeps orphans.
+Commit protocol: ONE path for every mode. ``write`` (snapshot or
+append), ``merge`` and ``compact`` read the parent manifest once,
+stage their data in a writer-unique ``data/vNNNNN-<uuid>`` directory,
+then publish the manifest built by the same single builder via
+write-temp + ``os.link`` (atomic on POSIX; exclusive — see
+concurrency below). A crashed write leaves an orphaned data directory
+but NO manifest — readers never see a partial version; ``expire``
+sweeps orphans. The store's directories are created by its first
+commit: reading a missing root finds no versions and creates nothing.
+What a version carries from its parent is decided in that builder
+alone: ``files`` — append carries all of them (merge, the files it
+did not rewrite); ``stats`` of carried files and ``properties`` —
+every mode but snapshot; ``max_batch_id`` — always.
 
 Concurrency contract: ONE writer at a time (the Structured-Streaming
 ``foreachBatch`` driver loop, or one batch job). Readers are always
@@ -63,6 +72,7 @@ import shutil
 import threading
 import time
 import uuid
+from collections.abc import Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -259,7 +269,6 @@ class SnapshotStore:
     def __init__(self, root: str, commit_protocol: CommitProtocol | None = None):
         self.root = root
         self.commit_protocol = commit_protocol or LinkCommitProtocol()
-        os.makedirs(os.path.join(root, _MANIFEST_DIR), exist_ok=True)
 
     # ----- manifest plumbing -------------------------------------------------
 
@@ -267,12 +276,13 @@ class SnapshotStore:
         return os.path.join(self.root, _MANIFEST_DIR, f"v{version:05d}.json")
 
     def versions(self) -> list[int]:
-        mdir = os.path.join(self.root, _MANIFEST_DIR)
-        out = []
-        for f in os.listdir(mdir):
-            if f.startswith("v") and f.endswith(".json"):
-                out.append(int(f[1:-5]))
-        return sorted(out)
+        try:
+            names = os.listdir(os.path.join(self.root, _MANIFEST_DIR))
+        except FileNotFoundError:
+            return []  # nothing committed yet (or a mistyped root)
+        return sorted(
+            int(f[1:-5]) for f in names if f.startswith("v") and f.endswith(".json")
+        )
 
     def latest_version(self) -> int | None:
         vs = self.versions()
@@ -281,6 +291,12 @@ class SnapshotStore:
     def manifest(self, version: int) -> dict[str, Any]:
         with open(self._manifest_path(version)) as fh:
             return json.load(fh)
+
+    def _head(self) -> dict[str, Any] | None:
+        """The latest manifest (None on an empty store) — the parent
+        every commit reads exactly once."""
+        latest = self.latest_version()
+        return None if latest is None else self.manifest(latest)
 
     def _commit(self, manifest: dict[str, Any]) -> None:
         """Atomic, EXCLUSIVE manifest publish through the pluggable
@@ -328,6 +344,85 @@ class SnapshotStore:
             }
         return out
 
+    def _stage(self, df: DataFrame, version: int) -> tuple[str, list[str], int]:
+        """Write ``df`` as the data of ``version``; returns (data dir,
+        its parquet files, the rows re-read from them). The one place a
+        version's data directory is created — and, on the first commit,
+        the store itself.
+
+        WRITER-UNIQUE staging dir: two writers racing the same version
+        number must never share a data directory — Spark part-file
+        names are job-unique, so a shared dir would let the winner's
+        _list_files silently absorb the loser's rows. With a unique dir
+        per write attempt, the exclusive manifest publish is the ONLY
+        race point: the loser's staging dir is an unreferenced orphan
+        that ``expire`` sweeps."""
+        os.makedirs(os.path.join(self.root, _MANIFEST_DIR), exist_ok=True)
+        data_dir = os.path.join(
+            self.root, _DATA_DIR, f"v{version:05d}-{uuid.uuid4().hex[:12]}"
+        )
+        df.write.mode("errorifexists").parquet(data_dir)
+        n = df.sparkSession.read.parquet(data_dir).count()
+        return data_dir, _list_files(data_dir), n
+
+    def _commit_version(
+        self,
+        pm: dict[str, Any] | None,
+        mode: str,
+        out: DataFrame,
+        schema: str,
+        *,
+        carried: Sequence[str] = (),
+        n_carried: int = 0,
+        stats_cols: tuple[str, ...] = (),
+        batch_id: int | None = None,
+        properties: "dict[str, Any] | None" = None,
+    ) -> tuple[dict[str, Any], WriteResult]:
+        """The one commit path: stage ``out`` as the version after
+        ``pm`` (the parent manifest, None on an empty store), assemble
+        its manifest and publish it. Returns (manifest, WriteResult).
+
+        ``carried`` are parent files the new version keeps by
+        reference (``n_carried`` rows). Every mode but ``snapshot``
+        inherits the parent's ``stats_cols`` (unless this commit names
+        its own), the stats of the carried files, and its
+        ``properties`` overlaid by this commit's. ``max_batch_id`` — the
+        monotonic batch-id watermark — is ALWAYS carried forward as
+        max(parent's, ``batch_id``), so the exactly-once check survives
+        ``expire`` deleting the manifest that recorded a batch id."""
+        version = (pm["version"] if pm else 0) + 1
+        data_dir, new_files, n_new = self._stage(out, version)
+        manifest: dict[str, Any] = {
+            "version": version,
+            "parent": pm["version"] if pm else None,
+            "mode": mode,
+            "committed_at": time.time(),
+            "files": [*carried, *new_files],
+            "n_rows": n_carried + n_new,
+            "schema": schema,
+        }
+        inherited = pm if pm and mode != "snapshot" else {}
+        stats_cols = stats_cols or tuple(inherited.get("stats_cols", ()))
+        if stats_cols:
+            old = inherited.get("stats", {})
+            stats = {f: old[f] for f in carried if f in old}
+            stats.update(self._file_stats(out.sparkSession, new_files, stats_cols))
+            manifest["stats_cols"] = list(stats_cols)
+            manifest["stats"] = stats
+        props = {**inherited.get("properties", {}), **(properties or {})}
+        if props:
+            manifest["properties"] = props
+        wm = pm.get("max_batch_id") if pm else None
+        if batch_id is not None:
+            manifest["batch_id"] = batch_id
+            wm = batch_id if wm is None else max(wm, batch_id)
+        if wm is not None:
+            manifest["max_batch_id"] = wm
+        self._commit(manifest)
+        return manifest, WriteResult(
+            rows=n_new, target=data_dir, extra={"version": version}
+        )
+
     def write(
         self,
         df: DataFrame,
@@ -361,39 +456,21 @@ class SnapshotStore:
         ``properties`` records JSON-native key/values verbatim in the
         manifest (the Iceberg table-properties idea at snapshot
         granularity) — train-time diagnostics, provenance, whatever a
-        writer wants readers to see next to the version. Appends
-        inherit the parent's properties, overlaid by this write's."""
+        writer wants readers to see next to the version. Every mode
+        but snapshot inherits the parent's properties, overlaid by
+        this write's."""
         if mode not in ("snapshot", "append"):
             raise ValueError(f"mode must be snapshot|append, got {mode!r}")
-        parent = self.latest_version()
-        version = (parent or 0) + 1
-        if mode == "append" and parent is None:
+        pm = self._head()
+        if pm is None:
             mode = "snapshot"  # first write of an append stream
-
-        # WRITER-UNIQUE staging dir: two writers racing the same
-        # version number must never share a data directory — Spark
-        # part-file names are job-unique, so a shared dir would let
-        # the winner's _list_files silently absorb the loser's rows.
-        # With a unique dir per write attempt, the exclusive manifest
-        # link below is the ONLY race point: the loser's staging dir
-        # is an unreferenced orphan that ``expire`` sweeps.
-        data_dir = os.path.join(
-            self.root, _DATA_DIR, f"v{version:05d}-{uuid.uuid4().hex[:12]}"
-        )
-        df.write.mode("errorifexists").parquet(data_dir)
-        new_files = _list_files(data_dir)
-        n_new = df.sparkSession.read.parquet(data_dir).count()
-
-        files = list(new_files)
-        n_rows = n_new
-        stats: dict[str, dict[str, list]] = {}
+        carried, n_carried = (), 0
         if mode == "append":
-            pm = self.manifest(parent)
             if pm["schema"] != df.schema.json():
                 if not (evolve and _is_additive(pm["schema"], df.schema)):
                     raise ValueError(
                         "append schema mismatch with parent version "
-                        f"{parent}: {pm['schema']} != {df.schema.json()}"
+                        f"{pm['version']}: {pm['schema']} != {df.schema.json()}"
                         + (
                             ""
                             if evolve
@@ -403,50 +480,17 @@ class SnapshotStore:
                 # additive evolution: the manifest adopts the WIDER
                 # schema; reads supply it explicitly, so old files
                 # yield NULL for the added columns
-            files = pm["files"] + files
-            n_rows = pm["n_rows"] + n_new
-            if not stats_cols and pm.get("stats_cols"):
-                stats_cols = tuple(pm["stats_cols"])  # chain stays prunable
-            stats.update(pm.get("stats", {}))
-        if stats_cols:
-            stats.update(
-                self._file_stats(df.sparkSession, new_files, stats_cols)
-            )
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "mode": mode,
-            "committed_at": time.time(),
-            "files": files,
-            "n_rows": n_rows,
-            "schema": df.schema.json(),
-        }
-        if stats_cols:
-            manifest["stats_cols"] = list(stats_cols)
-            manifest["stats"] = stats
-        props: dict[str, Any] = {}
-        if mode == "append" and parent is not None:
-            props.update(self.manifest(parent).get("properties", {}))
-        if properties:
-            props.update(properties)
-        if props:
-            manifest["properties"] = props
-        # Monotonic batch-id watermark: EVERY manifest carries forward
-        # max(parent's watermark, this write's batch_id), so the
-        # exactly-once check survives ``expire`` deleting the manifest
-        # that originally recorded a batch id.
-        wm = None
-        if parent is not None:
-            wm = self.manifest(parent).get("max_batch_id")
-        if batch_id is not None:
-            manifest["batch_id"] = batch_id
-            wm = batch_id if wm is None else max(wm, batch_id)
-        if wm is not None:
-            manifest["max_batch_id"] = wm
-        self._commit(manifest)
-        return WriteResult(rows=n_new, target=data_dir, extra={"version": version})
+            carried, n_carried = pm["files"], pm["n_rows"]
+        return self._commit_version(
+            pm, mode, df, df.schema.json(),
+            carried=carried, n_carried=n_carried, stats_cols=stats_cols,
+            batch_id=batch_id, properties=properties,
+        )[1]
 
     def committed_batch_ids(self) -> set[int]:
+        """Batch ids recorded by the LIVE manifests — a read-only
+        query; replay detection uses ``batch_watermark``, which also
+        covers ids whose manifests ``expire`` deleted."""
         return {
             m["batch_id"]
             for v in self.versions()
@@ -456,28 +500,41 @@ class SnapshotStore:
 
     def batch_watermark(self) -> int | None:
         """Highest batch id EVER committed, from the carried-forward
-        ``max_batch_id`` stamps — defined even after ``expire`` has
-        deleted the manifest that originally recorded it (as long as
-        at least one version survives, which ``expire(keep_last>=1)``
-        guarantees).
+        ``max_batch_id`` stamp of the LATEST manifest (one read) —
+        defined even after ``expire`` has deleted the manifest that
+        originally recorded it, since every commit carries the running
+        max forward and ``expire`` always keeps at least one
+        version."""
+        pm = self._head()
+        return pm.get("max_batch_id") if pm else None
 
-        O(1) on any store written since the watermark feature: the
-        LATEST manifest carries the running max forward, so one read
-        suffices. The full O(versions) scan runs only as a fallback
-        for stores whose newest manifests predate the stamp."""
-        latest = self.latest_version()
-        if latest is None:
-            return None
-        m = self.manifest(latest)
-        if "max_batch_id" in m:
-            return m["max_batch_id"]
-        wms = [
-            mm["max_batch_id"]
-            for v in self.versions()
-            for mm in [self.manifest(v)]
-            if "max_batch_id" in mm
-        ]
-        return max(wms) if wms else None
+    def _is_replay(self, batch_id: int) -> bool:
+        """The replay check ``write_batch`` and ``merge_batch`` share:
+        ids at or below ``batch_watermark`` already committed, since
+        Structured Streaming batch ids are monotonic.
+
+        OPERATIONAL HAZARD the monotonicity assumption implies: a
+        stream restarted with a FRESH checkpoint resets batch ids to
+        0, and this check will treat those ids as replays of
+        already-committed batches — a checkpoint reset therefore
+        needs a fresh store root too. The telltale is batch_id 0
+        arriving below a positive watermark (a legitimate replay of
+        an expired batch is always a RECENT id near the watermark,
+        never 0), so exactly that case logs a WARNING; ordinary
+        replays skip silently, by design."""
+        wm = self.batch_watermark()
+        if wm is None or batch_id > wm:
+            return False
+        if batch_id == 0 and wm > 0:
+            _log.warning(
+                "snapshot store %s: batch_id=0 arrived below "
+                "watermark=%d — this looks like a stream restarted "
+                "with a RESET checkpoint; point it at a fresh store "
+                "root or every batch up to the old watermark will "
+                "be silently dropped",
+                self.root, wm,
+            )
+        return True
 
     def write_batch(
         self, df: DataFrame, batch_id: int, mode: str = "append"
@@ -487,42 +544,12 @@ class SnapshotStore:
         already committed — Structured Streaming replays the last
         batch after failure recovery, and this check is what turns
         the store's atomic manifest commit into an idempotent (hence
-        exactly-once) sink. Returns None for a skipped replay.
+        exactly-once) sink. Returns None for a skipped replay (see
+        ``_is_replay``).
 
         Use as ``writeStream.foreachBatch(lambda df, bid:
-        store.write_batch(df, bid))`` with a checkpointLocation.
-
-        Replay detection: the monotonic ``batch_watermark`` carried
-        forward in every manifest (one O(1) manifest read per batch —
-        id <= watermark ⟹ already committed, since Structured
-        Streaming batch ids are monotonic), surviving ``expire``
-        deleting the manifest that recorded the id. The O(versions)
-        live-id set runs only as a fallback for stores whose
-        manifests predate the watermark stamp.
-
-        OPERATIONAL HAZARD the monotonicity assumption implies: a
-        stream restarted with a FRESH checkpoint resets batch ids to
-        0, and this sink will treat those ids as replays of
-        already-committed batches — a checkpoint reset therefore
-        needs a fresh store root too. The telltale is batch_id 0
-        arriving below a positive watermark (a legitimate replay of
-        an expired batch is always a RECENT id near the watermark,
-        never 0), so exactly that case logs a WARNING; ordinary
-        replays skip silently, by design."""
-        wm = self.batch_watermark()
-        if wm is not None:
-            if batch_id <= wm:
-                if batch_id == 0 and wm > 0:
-                    _log.warning(
-                        "snapshot store %s: batch_id=0 arrived below "
-                        "watermark=%d — this looks like a stream restarted "
-                        "with a RESET checkpoint; point it at a fresh store "
-                        "root or every batch up to the old watermark will "
-                        "be silently dropped",
-                        self.root, wm,
-                    )
-                return None
-        elif batch_id in self.committed_batch_ids():
+        store.write_batch(df, bid))`` with a checkpointLocation."""
+        if self._is_replay(batch_id):
             return None
         return self.write(df, mode=mode, batch_id=batch_id)
 
@@ -530,26 +557,15 @@ class SnapshotStore:
         self, df: DataFrame, key_cols: list[str], batch_id: int
     ) -> WriteResult | None:
         """Exactly-once streaming UPSERT: ``merge`` with the same
-        replay-skip discipline as ``write_batch`` (batch-watermark
-        fast path, live-id fallback for pre-watermark stores). A
-        replayed micro-batch re-applying a merge would not corrupt
-        rows (merge is idempotent on identical input), but it WOULD
-        burn a version and rewrite the hit files a second time — the
-        skip keeps the version chain 1:1 with committed batches.
+        replay skip as ``write_batch``. A replayed micro-batch
+        re-applying a merge would not corrupt rows (merge is
+        idempotent on identical input), but it WOULD burn a version
+        and rewrite the hit files a second time — the skip keeps the
+        version chain 1:1 with committed batches.
 
         Use via the streaming config's snapshot sink with
         ``{"mode": "merge", "key_cols": [...]}``."""
-        wm = self.batch_watermark()
-        if wm is not None:
-            if batch_id <= wm:
-                if batch_id == 0 and wm > 0:
-                    _log.warning(
-                        "snapshot store %s: merge batch_id=0 below "
-                        "watermark=%d — reset checkpoint? see write_batch",
-                        self.root, wm,
-                    )
-                return None
-        elif batch_id in self.committed_batch_ids():
+        if self._is_replay(batch_id):
             return None
         return self.merge(df, key_cols, batch_id=batch_id)
 
@@ -708,13 +724,12 @@ class SnapshotStore:
         files' rows for the rewrite. The only driver-side state is
         the hit FILE list — bounded by |files|, never by rows.
         """
-        parent = self.latest_version()
-        if parent is None:
+        pm = self._head()
+        if pm is None:
             return self.write(df, "snapshot", batch_id=batch_id)
-        pm = self.manifest(parent)
         if pm["schema"] != df.schema.json():
             raise ValueError(
-                f"merge schema mismatch with parent version {parent}: "
+                f"merge schema mismatch with parent version {pm['version']}: "
                 f"{pm['schema']} != {df.schema.json()}"
             )
         spark = df.sparkSession
@@ -744,10 +759,6 @@ class SnapshotStore:
         hit_files = [by_norm[n] for n in hit_norm]
         untouched = [f for f in pm["files"] if _norm_file(f) not in set(hit_norm)]
 
-        version = parent + 1
-        data_dir = os.path.join(
-            self.root, _DATA_DIR, f"v{version:05d}-{uuid.uuid4().hex[:12]}"
-        )
         if hit_files:
             survivors = self._reader(spark, pm).parquet(*hit_files).join(
                 keys, key_cols, "left_anti"
@@ -757,99 +768,38 @@ class SnapshotStore:
         else:
             out = df
             n_hit = 0
-        out.write.mode("errorifexists").parquet(data_dir)
-        new_files = _list_files(data_dir)
-        n_new = spark.read.parquet(data_dir).count()
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "mode": "merge",
-            "committed_at": time.time(),
-            "files": untouched + new_files,
-            "n_rows": pm["n_rows"] - n_hit + n_new,
-            "schema": df.schema.json(),
-        }
-        if pm.get("stats_cols"):
-            sc = tuple(pm["stats_cols"])
-            stats = {f: pm["stats"][f] for f in untouched if f in pm.get("stats", {})}
-            stats.update(self._file_stats(spark, new_files, sc))
-            manifest["stats_cols"] = list(sc)
-            manifest["stats"] = stats
-        wm = pm.get("max_batch_id")
-        if batch_id is not None:
-            manifest["batch_id"] = batch_id
-            wm = batch_id if wm is None else max(wm, batch_id)
-        if wm is not None:
-            manifest["max_batch_id"] = wm
-        self._commit(manifest)
-        return WriteResult(
-            rows=n_new,
-            target=data_dir,
-            extra={
-                "version": version,
-                "files_rewritten": len(hit_files),
-                "files_carried": len(untouched),
-            },
+        _, res = self._commit_version(
+            pm, "merge", out, df.schema.json(),
+            carried=untouched, n_carried=pm["n_rows"] - n_hit, batch_id=batch_id,
         )
+        res.extra.update(files_rewritten=len(hit_files), files_carried=len(untouched))
+        return res
 
     # ----- compaction --------------------------------------------------------
 
-    def compact(
-        self, spark: SparkSession, num_files: int | None = None
-    ) -> WriteResult:
+    def compact(self, spark: SparkSession) -> WriteResult:
         """Small-files maintenance: rewrite the LATEST version's rows
-        into ``num_files`` parquet files (default: total data bytes /
-        128 MiB, floor 1) and commit the result as a new version with
-        identical rows — the compaction every long append chain needs
-        before its manifest references thousands of micro-batch
-        part-files. Prior versions still reference the old files
-        (time travel intact); ``expire`` reclaims them once the
-        history ages out.
+        into total data bytes / 128 MiB parquet files (floor 1) and
+        commit the result as a new version with identical rows — the
+        compaction every long append chain needs before its manifest
+        references thousands of micro-batch part-files. Prior versions
+        still reference the old files (time travel intact); ``expire``
+        reclaims them once the history ages out.
         """
-        parent = self.latest_version()
-        if parent is None:
+        pm = self._head()
+        if pm is None:
             raise FileNotFoundError(f"snapshot store {self.root} has no versions")
-        pm = self.manifest(parent)
-        if num_files is None:
-            total = sum(os.path.getsize(f) for f in pm["files"])
-            num_files = max(1, total // (128 * 1024 * 1024))
+        total = sum(os.path.getsize(f) for f in pm["files"])
         # _reader, not schema-less read: after additive evolution the
         # file set mixes schemas — inferring from one pre-evolution
         # file would compact the evolved column OUT of the data while
         # the manifest keeps claiming it (permanent silent null-fill).
-        df = self._reader(spark, pm).parquet(*pm["files"]).coalesce(int(num_files))
-        version = parent + 1
-        data_dir = os.path.join(
-            self.root, _DATA_DIR, f"v{version:05d}-{uuid.uuid4().hex[:12]}"
+        out = self._reader(spark, pm).parquet(*pm["files"]).coalesce(
+            max(1, total // (128 * 1024 * 1024))
         )
-        df.write.mode("errorifexists").parquet(data_dir)
-        new_files = _list_files(data_dir)
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "mode": "compact",
-            "committed_at": time.time(),
-            "files": new_files,
-            "n_rows": pm["n_rows"],
-            "schema": pm["schema"],
-        }
-        if pm.get("stats_cols"):
-            sc = tuple(pm["stats_cols"])
-            manifest["stats_cols"] = list(sc)
-            manifest["stats"] = self._file_stats(spark, new_files, sc)
-        wm = pm.get("max_batch_id")
-        if wm is not None:
-            manifest["max_batch_id"] = wm
-        self._commit(manifest)
-        return WriteResult(
-            rows=pm["n_rows"],
-            target=data_dir,
-            extra={
-                "version": version,
-                "files_before": len(pm["files"]),
-                "files_after": len(new_files),
-            },
-        )
+        m, res = self._commit_version(pm, "compact", out, pm["schema"])
+        res.extra.update(files_before=len(pm["files"]), files_after=len(m["files"]))
+        return res
 
     # ----- retention ---------------------------------------------------------
 
@@ -857,9 +807,13 @@ class SnapshotStore:
         """Drop all but the newest ``keep_last`` versions. Data files
         still referenced by a SURVIVING manifest are kept (append
         chains share files); orphaned data directories from crashed
-        writes are swept too. Returns the expired version numbers."""
+        writes are swept too. Returns the expired version numbers.
+        ``keep_last`` must be >= 1: dropping every version would delete
+        the table and, with it, the exactly-once batch watermark."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         vs = self.versions()
-        expired = vs[:-keep_last] if keep_last > 0 else vs
+        expired = vs[:-keep_last]
         survivors = vs[len(expired):]
         keep_files = set()
         for v in survivors:

@@ -152,14 +152,10 @@ def _ensure(spark, root, train, save, load):
     path, never the in-memory one). A racing trainer that loses the
     exclusive publish loads the winner's version — both racers end
     up on the same index, which is the whole point of versioning."""
-    import os
-
     from etlp_spark.connectors.snapshots import ConcurrentWriteError
 
-    if os.path.isdir(os.path.join(root, "_manifests")):
-        store = SnapshotStore(root)
-        if store.latest_version() is not None:
-            return load(spark, root)
+    if SnapshotStore(root).latest_version() is not None:
+        return load(spark, root)
     model = train()
     try:
         save(spark, root, model)

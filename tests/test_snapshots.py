@@ -90,6 +90,22 @@ def test_expire_sweeps_unreferenced_and_orphaned_dirs(spark, store):
     assert sorted(r.id for r in store.read(spark).collect()) == [2]
 
 
+def test_expire_rejects_keep_last_below_one(spark, store):
+    """keep_last < 1 would drop every manifest and data dir — the
+    whole table and its batch watermark. It is refused, and the
+    refused call touches nothing."""
+    store.write_batch(_df(spark, [1]), batch_id=0)
+    store.write_batch(_df(spark, [2]), batch_id=1)
+    data = sorted(os.listdir(os.path.join(store.root, "data")))
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            store.expire(keep_last=bad)
+    assert store.versions() == [1, 2]
+    assert sorted(os.listdir(os.path.join(store.root, "data"))) == data
+    assert store.batch_watermark() == 1
+    assert sorted(r.id for r in store.read(spark).collect()) == [1, 2]
+
+
 def test_commit_is_manifest_last(spark, store):
     """Crash protocol: a version exists iff its manifest exists. The
     .tmp intermediary never counts as a version."""
@@ -117,6 +133,7 @@ def test_connector_protocol_surface(spark, tmp_path):
 
     missing = SnapshotSource(str(tmp_path / "empty"))
     assert not missing.check(spark).ok
+    assert not (tmp_path / "empty").exists()  # a read-only probe creates nothing
 
     pinned = SnapshotSource(root, version=42)
     assert not pinned.check(spark).ok
@@ -659,7 +676,7 @@ def test_compact_preserves_rows_and_history(spark, store):
     before = store.manifest(store.latest_version())
     assert len(before["files"]) >= 4
 
-    res = store.compact(spark, num_files=1)
+    res = store.compact(spark)
     assert res.extra["files_after"] == 1
     assert res.extra["files_before"] == len(before["files"])
     m = store.manifest(store.latest_version())
@@ -876,7 +893,7 @@ def test_merge_and_compact_after_schema_evolution(spark, store):
     store.write(wider.coalesce(1), mode="append", evolve=True)
 
     # compact after evolution: the evolved column's VALUES must survive
-    store.compact(spark, num_files=1)
+    store.compact(spark)
     got = {r.id: (r.val, r.score) for r in store.read(spark).collect()}
     assert got == {1: ("r1", None), 2: ("r2", None), 3: ("r3", 7.5)}
 
@@ -1001,10 +1018,11 @@ def test_read_increment_refuses_rewrite_chains(spark, store):
 
 def test_manifest_properties_recorded_and_append_inherited(spark, store):
     """write(properties=): JSON-native key/values land verbatim in
-    the version's manifest; appends INHERIT the parent's properties
-    overlaid by their own; snapshots carry only what they pass; a
-    property-less write records no key at all (the r14 IVF occupancy
-    diagnostics ride this — Iceberg-style snapshot properties)."""
+    the version's manifest; appends, merges and compactions INHERIT
+    the parent's properties (appends overlaid by their own);
+    snapshots carry only what they pass; a property-less write
+    records no key at all (the r14 IVF occupancy diagnostics ride
+    this — Iceberg-style snapshot properties)."""
     store.write(_df(spark, [1, 2]), properties={"owner": "pipe-a", "k": 4})
     m1 = store.manifest(1)
     assert m1["properties"] == {"owner": "pipe-a", "k": 4}
@@ -1018,6 +1036,12 @@ def test_manifest_properties_recorded_and_append_inherited(spark, store):
     store.write(_df(spark, [4]), mode="append")
     assert store.manifest(3)["properties"] == {"owner": "pipe-a", "k": 8}
 
+    # merge and compact rewrite data, not the table's identity
+    store.merge(_df(spark, [4, 5]), key_cols=["id"])
+    assert store.manifest(4)["properties"] == {"owner": "pipe-a", "k": 8}
+    store.compact(spark)
+    assert store.manifest(5)["properties"] == {"owner": "pipe-a", "k": 8}
+
     # a fresh SNAPSHOT does not inherit (it replaces the table)
     store.write(_df(spark, [9]))
-    assert "properties" not in store.manifest(4)
+    assert "properties" not in store.manifest(6)
