@@ -517,9 +517,11 @@ class ConfiguredStream:
     ``foreachBatch``: each micro-batch is quarantined by the data
     contract (clean rows → sink, violations wrapped in the ETLP error
     envelope → error sink), and a snapshot sink commits via
-    ``write_batch`` — batch-id idempotent, so the whole
-    source→quarantine→sink path is exactly-once under checkpointing.
-    Without expectations and with a native sink the plan goes straight
+    ``write_batch``/``merge_batch`` — batch-id idempotent, so the
+    snapshot sink is exactly-once under checkpointing. A parquet error
+    sink is at-least-once: it appends once per batch, so a batch
+    replayed after a crash between the error write and the streaming
+    commit log appends its violations twice. Without expectations and with a native sink the plan goes straight
     to ``writeStream.format(...)`` (no Python in the hot path)."""
 
     pipeline: Any  # StreamingPipeline

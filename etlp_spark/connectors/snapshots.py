@@ -40,14 +40,18 @@ append), ``merge`` and ``compact`` read the parent manifest once,
 stage their data in a writer-unique ``data/vNNNNN-<uuid>`` directory,
 then publish the manifest built by the same single builder via
 write-temp + ``os.link`` (atomic on POSIX; exclusive — see
-concurrency below). A crashed write leaves an orphaned data directory
-but NO manifest — readers never see a partial version; ``expire``
-sweeps orphans. The store's directories are created by its first
-commit: reading a missing root finds no versions and creates nothing.
-What a version carries from its parent is decided in that builder
-alone: ``files`` — append carries all of them (merge, the files it
-did not rewrite); ``stats`` of carried files and ``properties`` —
-every mode but snapshot; ``max_batch_id`` — always.
+concurrency below). Row counts are observed inside the staging write
+(``DataFrame.observe``), never re-read: a snapshot, append or compact
+costs ONE Spark job (plus the zone-map stats pass when
+``stats_cols`` is set), a merge one key semi-join plus that write.
+A crashed write leaves an orphaned data directory but NO manifest —
+readers never see a partial version; ``expire`` sweeps orphans. The
+store's directories are created by its first commit: reading a
+missing root finds no versions and creates nothing. What a version
+carries from its parent is decided in that builder alone: ``files``
+— append carries all of them (merge, the files it did not rewrite);
+``stats`` of carried files and ``properties`` — every mode but
+snapshot; ``max_batch_id`` — always.
 
 Concurrency contract: ONE writer at a time (the Structured-Streaming
 ``foreachBatch`` driver loop, or one batch job). Readers are always
@@ -72,10 +76,10 @@ import shutil
 import threading
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from etlp_spark.connectors.base import (
     CheckResult,
@@ -223,6 +227,17 @@ def _list_files(data_dir: str) -> list[str]:
     )
 
 
+def _counted(df: DataFrame, name: str) -> tuple[DataFrame, Callable[[], int]]:
+    """``df`` with its row count observed by whichever job first runs
+    it, plus a getter for that count (valid once the job finished) —
+    the count rides the write instead of costing a second scan, as in
+    ``ParquetSink.write``. ``name`` must be unique within one plan.
+    Exact as long as each stage runs once: when ``df`` feeds a shuffle,
+    a map stage re-run after a lost executor adds its rows again."""
+    obs = Observation(name)
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), lambda: obs.get["rows"]
+
+
 def _is_additive(old_json: str, new_schema) -> bool:
     """True iff ``new_schema`` only ADDS nullable columns to the
     schema serialized in ``old_json`` — every old field must survive
@@ -346,9 +361,10 @@ class SnapshotStore:
 
     def _stage(self, df: DataFrame, version: int) -> tuple[str, list[str], int]:
         """Write ``df`` as the data of ``version``; returns (data dir,
-        its parquet files, the rows re-read from them). The one place a
+        its parquet files, the rows written). The one place a
         version's data directory is created — and, on the first commit,
-        the store itself.
+        the store itself. The row count is observed inside the write
+        job (``_counted``), so staging is exactly one Spark job.
 
         WRITER-UNIQUE staging dir: two writers racing the same version
         number must never share a data directory — Spark part-file
@@ -361,9 +377,9 @@ class SnapshotStore:
         data_dir = os.path.join(
             self.root, _DATA_DIR, f"v{version:05d}-{uuid.uuid4().hex[:12]}"
         )
-        df.write.mode("errorifexists").parquet(data_dir)
-        n = df.sparkSession.read.parquet(data_dir).count()
-        return data_dir, _list_files(data_dir), n
+        counted, rows = _counted(df, "etlp_stage")
+        counted.write.mode("errorifexists").parquet(data_dir)
+        return data_dir, _list_files(data_dir), rows()
 
     def _commit_version(
         self,
@@ -373,17 +389,20 @@ class SnapshotStore:
         schema: str,
         *,
         carried: Sequence[str] = (),
-        n_carried: int = 0,
+        n_carried: int | Callable[[], int] = 0,
         stats_cols: tuple[str, ...] = (),
         batch_id: int | None = None,
         properties: "dict[str, Any] | None" = None,
     ) -> tuple[dict[str, Any], WriteResult]:
         """The one commit path: stage ``out`` as the version after
-        ``pm`` (the parent manifest, None on an empty store), assemble
-        its manifest and publish it. Returns (manifest, WriteResult).
+        ``pm`` (the parent manifest, None on an empty store), then
+        assemble its manifest and publish it. Returns (manifest,
+        WriteResult).
 
         ``carried`` are parent files the new version keeps by
-        reference (``n_carried`` rows). Every mode but ``snapshot``
+        reference (``n_carried`` rows — or a getter, called after
+        staging, for a count observed by the staging job itself, as
+        ``merge`` does). Every mode but ``snapshot``
         inherits the parent's ``stats_cols`` (unless this commit names
         its own), the stats of the carried files, and its
         ``properties`` overlaid by this commit's. ``max_batch_id`` — the
@@ -392,6 +411,8 @@ class SnapshotStore:
         ``expire`` deleting the manifest that recorded a batch id."""
         version = (pm["version"] if pm else 0) + 1
         data_dir, new_files, n_new = self._stage(out, version)
+        if callable(n_carried):
+            n_carried = n_carried()
         manifest: dict[str, Any] = {
             "version": version,
             "parent": pm["version"] if pm else None,
@@ -720,9 +741,11 @@ class SnapshotStore:
         files (time travel intact) until ``expire`` reclaims them.
 
         Scale shape: one key semi-join (keys only shuffle, never full
-        rows) to find hit files; one anti-join over JUST the hit
-        files' rows for the rewrite. The only driver-side state is
-        the hit FILE list — bounded by |files|, never by rows.
+        rows) to find hit files; one write job, whose anti-join over
+        JUST the hit files' rows does the rewrite. Both row counts the
+        manifest needs — rows written and rows in the hit files — are
+        observed by that write, not recounted. The only driver-side
+        state is the hit FILE list — bounded by |files|, never by rows.
         """
         pm = self._head()
         if pm is None:
@@ -733,7 +756,10 @@ class SnapshotStore:
                 f"{pm['schema']} != {df.schema.json()}"
             )
         spark = df.sparkSession
-        keys = df.select(*key_cols).distinct()
+        # batch keys may repeat: left_semi/left_anti return the same
+        # rows either way, and a distinct would add a shuffle stage to
+        # both joins
+        keys = df.select(*key_cols)
         # EVERY parent-file read below goes through _reader: after an
         # evolve=True append the manifest's file set mixes schemas, and
         # a schema-less read would infer from one (possibly
@@ -759,18 +785,18 @@ class SnapshotStore:
         hit_files = [by_norm[n] for n in hit_norm]
         untouched = [f for f in pm["files"] if _norm_file(f) not in set(hit_norm)]
 
+        out, n_carried = df, pm["n_rows"]
         if hit_files:
-            survivors = self._reader(spark, pm).parquet(*hit_files).join(
-                keys, key_cols, "left_anti"
+            # the hit files' rows are counted by the write job that
+            # scans them for the anti-join — no separate count job
+            hit, n_hit = _counted(
+                self._reader(spark, pm).parquet(*hit_files), "etlp_merge_hit"
             )
-            out = survivors.unionByName(df)
-            n_hit = self._reader(spark, pm).parquet(*hit_files).count()
-        else:
-            out = df
-            n_hit = 0
+            out = hit.join(keys, key_cols, "left_anti").unionByName(df)
+            n_carried = lambda: pm["n_rows"] - n_hit()  # noqa: E731
         _, res = self._commit_version(
             pm, "merge", out, df.schema.json(),
-            carried=untouched, n_carried=pm["n_rows"] - n_hit, batch_id=batch_id,
+            carried=untouched, n_carried=n_carried, batch_id=batch_id,
         )
         res.extra.update(files_rewritten=len(hit_files), files_carried=len(untouched))
         return res
@@ -815,9 +841,13 @@ class SnapshotStore:
         vs = self.versions()
         expired = vs[:-keep_last]
         survivors = vs[len(expired):]
-        keep_files = set()
-        for v in survivors:
-            keep_files.update(self.manifest(v)["files"])
+        # both sides through _norm_file: the manifests hold whatever
+        # root string wrote them, the listing below uses this handle's
+        # root — an absolute-vs-relative or symlinked pair of the same
+        # store must not read as "nothing referenced"
+        keep_files = {
+            _norm_file(f) for v in survivors for f in self.manifest(v)["files"]
+        }
         for v in expired:
             os.remove(self._manifest_path(v))
         # sweep data dirs with no referenced files left (incl. orphans)
@@ -825,7 +855,7 @@ class SnapshotStore:
         if os.path.isdir(ddir):
             for d in sorted(os.listdir(ddir)):
                 full = os.path.join(ddir, d)
-                files = set(_list_files(full))
+                files = {_norm_file(f) for f in _list_files(full)}
                 if files:
                     sweep = files.isdisjoint(keep_files)
                 else:

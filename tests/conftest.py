@@ -1,6 +1,7 @@
 import os
 
 import pytest
+from pyspark import SparkContext
 
 from etlp_spark.protobuf_vendor import ensure_protobuf
 from etlp_spark.session import get_spark
@@ -22,3 +23,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def spark_jobs(name, fn):
+    """Run ``fn`` under Spark job group ``name`` (unique per call) and
+    return how many Spark jobs it started, broadcast and adaptive
+    stage jobs included."""
+    sc = SparkContext.getOrCreate()
+    sc.setJobGroup(name, name)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(name))

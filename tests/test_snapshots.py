@@ -6,8 +6,10 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from etlp_spark.connectors.snapshots import SnapshotSink, SnapshotSource, SnapshotStore
+from tests.conftest import spark_jobs
 
 
 @pytest.fixture()
@@ -104,6 +106,31 @@ def test_expire_rejects_keep_last_below_one(spark, store):
     assert sorted(os.listdir(os.path.join(store.root, "data"))) == data
     assert store.batch_watermark() == 1
     assert sorted(r.id for r in store.read(spark).collect()) == [1, 2]
+
+
+def test_expire_through_relative_and_symlinked_root(spark, tmp_path):
+    """expire compares the surviving manifests' file strings against
+    the data dirs it lists under its OWN root. A store written through
+    an absolute root and expired through a relative or symlinked root
+    spells the same files differently; both sides are normalized, so
+    the live version's files survive."""
+    real = tmp_path / "tbl"
+    writer = SnapshotStore(str(real))
+    writer.write(_df(spark, [1, 2]))
+    writer.write(_df(spark, [3, 4]))
+    rel = os.path.relpath(str(real), os.getcwd())
+    assert not os.path.isabs(rel)
+    assert SnapshotStore(rel).expire(keep_last=1) == [1]
+    assert all(os.path.exists(f) for f in writer.manifest(2)["files"])
+    assert sorted(r.id for r in writer.read(spark).collect()) == [3, 4]
+
+    writer.write(_df(spark, [5, 6]))
+    link = tmp_path / "link_tbl"
+    os.symlink(str(real), str(link))
+    assert SnapshotStore(str(link)).expire(keep_last=1) == [2]
+    assert all(os.path.exists(f) for f in writer.manifest(3)["files"])
+    assert sorted(r.id for r in writer.read(spark).collect()) == [5, 6]
+    assert len(os.listdir(real / "data")) == 1
 
 
 def test_commit_is_manifest_last(spark, store):
@@ -1045,3 +1072,81 @@ def test_manifest_properties_recorded_and_append_inherited(spark, store):
     # a fresh SNAPSHOT does not inherit (it replaces the table)
     store.write(_df(spark, [9]))
     assert "properties" not in store.manifest(6)
+
+
+def _ranged(spark, lo, hi, parts=4, tag="v"):
+    """``_df``'s (id, val) rows for ids [lo, hi) in ``parts``
+    contiguous partitions — one data file each when written."""
+    r = spark.range(lo, hi, numPartitions=parts)
+    val = F.concat(F.lit(tag), r.id.cast("string"))
+    # when() without otherwise() is nullable: the schema must equal
+    # _df's (createDataFrame) one, which merge and append compare
+    return r.select(
+        F.when(r.id.isNotNull(), r.id).alias("id"),
+        F.when(val.isNotNull(), val).alias("val"),
+    )
+
+
+def test_manifest_n_rows_exact_under_observed_counts(spark, store):
+    """Row counts are observed inside each commit's write job, not
+    re-read. After every commit of a scripted sequence, the manifest's
+    n_rows equals the rows the version reads, and WriteResult.rows the
+    rows staged in its data directory — across every commit mode and
+    the merge shapes whose counts differ: some, all or no files hit, a
+    repeated batch key, an empty batch, an evolved schema, and a
+    shuffle (not broadcast) anti-join."""
+    from etlp_spark import expectations as X
+    from etlp_spark.pipeline import split_by_expectations
+
+    def check(res):
+        m = store.manifest(res.extra["version"])
+        assert m["n_rows"] == store.read(spark, m["version"]).count()
+        assert res.rows == spark.read.parquet(res.target).count()
+        return m
+
+    check(store.write(_ranged(spark, 0, 40)))                              # 4 files
+    check(store.write(_ranged(spark, 40, 60, parts=2), mode="append"))     # 6 files
+    some = spark.createDataFrame([(5, "u"), (45, "u"), (100, "new")], ["id", "val"])
+    res = store.merge(some, ["id"])
+    assert res.extra["files_rewritten"] == 2 and check(res)["n_rows"] == 61
+    res = store.merge(store.read(spark).withColumn("val", F.concat(F.lit("all-"), "val")), ["id"])
+    assert res.extra["files_carried"] == 0 and check(res)["n_rows"] == 61
+    res = store.merge(_ranged(spark, 500, 510, parts=2), ["id"])
+    assert res.extra["files_rewritten"] == 0 and check(res)["n_rows"] == 71
+    dup = spark.createDataFrame([(7, "a"), (7, "b"), (600, "x"), (600, "y")], ["id", "val"])
+    assert check(store.merge(dup, ["id"]))["n_rows"] == 74  # both copies land
+    clean, violations = split_by_expectations(
+        _ranged(spark, 0, 30), [X.in_range("id", 1000, 2000)]
+    )
+    assert violations.count() == 30
+    res = store.merge(clean, ["id"])
+    assert res.rows == 0 and check(res)["n_rows"] == 74
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        check(store.merge(_ranged(spark, 20, 30, tag="smj"), ["id"]))
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+    wide = _ranged(spark, 700, 710, parts=1).withColumn("note", F.concat(F.lit("n"), "val"))
+    assert check(store.write(wide, mode="append", evolve=True))["n_rows"] == 84
+    upd = spark.createDataFrame([(3, "e", "z"), (705, "e", None), (800, "e", "z")],
+                                "id long, val string, note string")
+    res = store.merge(upd, ["id"])
+    assert check(res)["n_rows"] == 85
+    res = store.compact(spark)
+    assert res.rows == 85 and check(res)["n_rows"] == 85
+
+
+def test_commit_spark_job_counts(spark, store):
+    """Regression guard for the commit cost: counts ride the staging
+    write, so snapshot/append/compact are one Spark job and a merge is
+    a key semi-join plus one write (20 k-row store, 5 k-row batches)."""
+    store.write(_ranged(spark, 0, 20_000))
+    hits = _ranged(spark, 15_000, 20_000, tag="u")
+    assert spark_jobs("merge_hits", lambda: store.merge(hits, ["id"])) <= 5
+    inserts = _ranged(spark, 100_000, 105_000)
+    assert spark_jobs("merge_inserts", lambda: store.merge(inserts, ["id"])) <= 3
+    more = _ranged(spark, 200_000, 205_000)
+    assert spark_jobs("append", lambda: store.write(more, mode="append")) == 1
+    assert spark_jobs("compact", lambda: store.compact(spark)) == 1
+    assert store.manifest(store.latest_version())["n_rows"] == 30_000
